@@ -121,8 +121,10 @@ final case class IngestionPipeline(
     df
   }
 
-  /** Run end-to-end into a vector store path. Enricher outputs (any
-    * column beyond the chunk contract) ride along as record metadata.
+  /** Run end-to-end into a vector store path, under the store's
+    * persisted bucket layout ([[VectorStoreWriter.write]]). Enricher
+    * outputs (any column beyond the chunk contract) ride along as
+    * record metadata.
     */
   def run(spark: SparkSession, documents: DataFrame, sinkPath: String,
           dim: Int = 64): Unit =

@@ -1,8 +1,31 @@
 package graft.sinks
 
 import graft.functions.VectorFunctions
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import scala.util.Using
+
+/** Writer options — the twin of VectorStoreWriterOptions.cs:10-30.
+  * `collectionName` (reference default "chunks") becomes a sub-path of
+  * the store root, so one store holds many collections like a vector
+  * DB does; `distanceFunction` is recorded per collection and drives
+  * the scoring expression search uses (see
+  * [[VectorStoreWriter.distance]]); `incrementalIngestion` mirrors the
+  * reference's delete-before-insert replace semantics (reference
+  * default false; graft keeps its historical default true — upsert is
+  * the common ingestion mode at scale).
+  */
+final case class VectorStoreWriterOptions(
+    collectionName: String = "chunks",
+    distanceFunction: String = VectorStoreWriter.Cosine,
+    incrementalIngestion: Boolean = true) {
+  require(collectionName.nonEmpty, "collectionName must not be empty") // VectorStoreWriterOptions.cs:18
+  require(VectorStoreWriter.DistanceFunctions.contains(distanceFunction),
+    s"unknown distanceFunction '$distanceFunction' " +
+      s"(supported: ${VectorStoreWriter.DistanceFunctions.mkString(", ")})")
+}
 
 /** Vector-store writer — the Spark twin of Writers/VectorStoreWriter.cs.
   *
@@ -20,31 +43,31 @@ import org.apache.spark.sql.functions._
   * bucket is the job of a table format (Delta/Iceberg MERGE) or the
   * target vector store's own upsert — `key` is deterministic
   * (documentid:chunkid) precisely so that upsert is idempotent.
+  *
+  * Layout contract. A record lives in directory
+  * `doc_bucket=pmod(xxhash64(documentid), n)`, and `n` is an invariant
+  * of the store, not a tuning knob: a write hashing under any other
+  * modulus would miss a re-ingested document's old records and leave
+  * them stale. So every writer — bulk [[graft.pipeline.IngestionPipeline.run]],
+  * the options-based write, the streaming incremental writer — goes
+  * through [[write]], which
+  *  - on a fresh store chooses `n` ONCE from the first batch's record
+  *    count ([[chooseNumBuckets]]: a power of two in
+  *    [[[MinBuckets]], [[MaxBuckets]]]) and persists it in
+  *    `_layout.json` (underscore-prefixed: parquet readers ignore it)
+  *    before any data;
+  *  - on every later write reads `n` back from `_layout.json`;
+  *  - on a store that has data but no `_layout.json` — written by the
+  *    former fixed-count writer — pins [[LegacyBuckets]] (256) first.
   */
-/** Writer options — the twin of VectorStoreWriterOptions.cs:10-30.
-  * `collectionName` (reference default "chunks") becomes a sub-path of
-  * the store root, so one store holds many collections like a vector
-  * DB does; `distanceFunction` is recorded per collection and drives
-  * the scoring expression search uses (see
-  * [[VectorStoreWriter.distance]]); `incrementalIngestion` mirrors the
-  * reference's delete-before-insert replace semantics (reference
-  * default false; graft keeps its historical default true — upsert is
-  * the common ingestion mode at scale).
-  */
-final case class VectorStoreWriterOptions(
-    collectionName: String = "chunks",
-    distanceFunction: String = VectorStoreWriter.Cosine,
-    incrementalIngestion: Boolean = true,
-    numBuckets: Int = VectorStoreWriter.NumBuckets) {
-  require(collectionName.nonEmpty, "collectionName must not be empty") // VectorStoreWriterOptions.cs:18
-  require(VectorStoreWriter.DistanceFunctions.contains(distanceFunction),
-    s"unknown distanceFunction '$distanceFunction' " +
-      s"(supported: ${VectorStoreWriter.DistanceFunctions.mkString(", ")})")
-}
-
 object VectorStoreWriter {
 
-  val NumBuckets = 256
+  /** Bucket count of stores written before the layout was persisted:
+    * the former writer always hashed into this many buckets. */
+  val LegacyBuckets = 256
+
+  /** Store-root file recording the bucket count. */
+  val LayoutFile = "_layout.json"
 
   /** Scale-adaptive creation-time layout (r12 optimization round):
     * sizing targets for [[chooseNumBuckets]]. ~64k records/bucket is
@@ -102,8 +125,7 @@ object VectorStoreWriter {
     */
   def write(records: DataFrame, root: String,
             options: VectorStoreWriterOptions): Unit =
-    write(records, collectionPath(root, options),
-      incremental = options.incrementalIngestion, numBuckets = options.numBuckets)
+    write(records, collectionPath(root, options), options.incrementalIngestion)
 
   /** Chunks (doc_id, chunk_id, content, context) → vector records.
     * Embedding is the hermetic hash embedder (swap for a model UDF in
@@ -125,71 +147,92 @@ object VectorStoreWriter {
     ) ++ extras: _*)
   }
 
-  /** [[write]] with a creation-time PERSISTED bucket layout — the
-    * incremental-ingestion entry point (r12 optimization round). The
-    * bucket count is a correctness invariant of the store, not a
-    * tuning knob: `pmod(xxhash64(documentid), n)` must be stable
-    * across every batch or a re-ingested document's old records
-    * (hashed under a different modulus) would never be replaced. So
-    * the count is chosen ONCE, from the seed batch's size
-    * ([[chooseNumBuckets]] — scale-adaptive instead of a constant 256
-    * directories for stores of any size), recorded in
-    * `_layout.json` (underscore-prefixed: parquet readers ignore it),
-    * and every later write reuses the recorded value. The layout file
-    * is written BEFORE the seed data so a crash between the two
-    * leaves an empty store with a pinned layout that a re-run honors.
+  /** Write records into the store at `path` under its persisted
+    * bucket layout (the layout contract above) — the one write
+    * path into a store. Incremental mode is a copy-on-write upsert:
+    * records of re-ingested documents are replaced, every other
+    * document's records survive — including ones that merely share a
+    * bucket with this batch (a blind dynamic-partition overwrite would
+    * wipe them). Rewrite cost is bounded by the touched buckets, not
+    * the store size. Non-incremental mode appends.
+    *
+    * A fresh store's record count must not evaluate the input a second
+    * time (for a pipeline, that is every reader, chunker and enricher
+    * again): the input is persisted for the count, so the count fills
+    * the cache and the write reads it. An input the caller already
+    * persisted is used as is and left cached.
     */
-  def writeWithLayout(records: DataFrame, path: String): Unit = {
-    val session = records.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(session.sparkContext.hadoopConfiguration)
-    val layoutFile = new org.apache.hadoop.fs.Path(path, "_layout.json")
-    val n =
-      if (fs.exists(layoutFile)) {
-        val in = fs.open(layoutFile)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        "\"numBuckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt)
-          .map(_.group(1).toInt)
-          .getOrElse(throw new IllegalStateException(
-            s"unreadable store layout at $layoutFile: $txt"))
-      } else {
-        val chosen = chooseNumBuckets(records.count())
-        val out = fs.create(layoutFile, true)
-        try out.write(s"""{"numBuckets":$chosen}""".getBytes("UTF-8"))
-        finally out.close()
-        chosen
+  def write(records: DataFrame, path: String, incremental: Boolean = true): Unit = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(records.sparkSession.sparkContext.hadoopConfiguration)
+    // data presence, not directory presence: metadata files
+    // (_layout.json, _SUCCESS) alone must not trigger the survivor
+    // read of an empty store
+    val data =
+      if (!fs.exists(root)) Array.empty[FileStatus]
+      else fs.listStatus(root).filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
       }
-    write(records, path, incremental = true, numBuckets = n)
+    readLayout(fs, root) match {
+      case Some(n) => writeBuckets(records, path, incremental, data.nonEmpty, n)
+      case None if data.nonEmpty =>
+        checkLegacyBuckets(data, root)
+        pinLayout(fs, root, LegacyBuckets)
+        writeBuckets(records, path, incremental, storeHasData = true, LegacyBuckets)
+      case None =>
+        val ownCache = records.storageLevel == StorageLevel.NONE
+        if (ownCache) records.persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val n = chooseNumBuckets(records.count())
+          // layout BEFORE the seed data: a crash between the two leaves
+          // an empty store with a pinned layout that a re-run honors
+          pinLayout(fs, root, n)
+          writeBuckets(records, path, incremental, storeHasData = false, n)
+        } finally if (ownCache) records.unpersist()
+    }
   }
 
-  /** Write records bucketed by document. Incremental mode is a
-    * copy-on-write upsert: records of re-ingested documents are
-    * replaced, every other document's records survive — including ones
-    * that merely share a bucket with this batch (a blind
-    * dynamic-partition overwrite would wipe them). Rewrite cost is
-    * bounded by the touched buckets, not the store size.
-    */
-  def write(records: DataFrame, path: String, incremental: Boolean = true,
-            numBuckets: Int = NumBuckets): Unit = {
+  private def readLayout(fs: FileSystem, root: Path): Option[Int] = {
+    val file = new Path(root, LayoutFile)
+    if (!fs.exists(file)) None
+    else {
+      val txt = Using.resource(fs.open(file))(
+        scala.io.Source.fromInputStream(_, "UTF-8").mkString)
+      Some("\"numBuckets\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt)
+        .map(_.group(1).toInt).filter(_ >= 1)
+        .getOrElse(throw new IllegalStateException(
+          s"unreadable store layout at $file: $txt")))
+    }
+  }
+
+  private def pinLayout(fs: FileSystem, root: Path, n: Int): Unit =
+    Using.resource(fs.create(new Path(root, LayoutFile), true))(
+      _.write(s"""{"numBuckets":$n}""".getBytes("UTF-8")))
+
+  /** A store without a layout file must be the former writer's: every
+    * bucket directory id below [[LegacyBuckets]]. Anything else was
+    * hashed under an unknown modulus, and pinning 256 over it would
+    * silently leave stale records behind. */
+  private def checkLegacyBuckets(data: Array[FileStatus], root: Path): Unit =
+    data.map(_.getPath.getName).filter(_.startsWith("doc_bucket=")).foreach { name =>
+      val id = name.stripPrefix("doc_bucket=").toIntOption
+      if (!id.exists(i => i >= 0 && i < LegacyBuckets))
+        throw new IllegalStateException(
+          s"store $root has no $LayoutFile and bucket directory $name is not " +
+            s"one of the $LegacyBuckets legacy buckets; its bucket count is unknown")
+    }
+
+  private def writeBuckets(records: DataFrame, path: String, incremental: Boolean,
+                           storeHasData: Boolean, buckets: Int): Unit = {
     val session = records.sparkSession
     val bucketed = records
-      .withColumn("doc_bucket", pmod(xxhash64(col("documentid")), lit(numBuckets)))
+      .withColumn("doc_bucket", pmod(xxhash64(col("documentid")), lit(buckets)))
     val previous = session.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     session.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(session.sparkContext.hadoopConfiguration)
-      // data presence, not directory presence: metadata files
-      // (_layout.json, _SUCCESS) alone must not trigger the survivor
-      // read of an empty store
-      val sinkExists = fs.exists(new org.apache.hadoop.fs.Path(path)) &&
-        fs.listStatus(new org.apache.hadoop.fs.Path(path)).exists { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        }
       val toWrite =
-        if (!incremental || !sinkExists) bucketed
+        if (!incremental || !storeHasData) bucketed
         else {
           // survivors: rows in touched buckets that belong to OTHER
           // documents; materialized (localCheckpoint) so we never

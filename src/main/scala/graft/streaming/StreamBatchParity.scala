@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
+import scala.util.Using
 
 /** Stream-batch parity harness: runs a BATCH corpus through a real
   * Structured Streaming execution (file source → watermarked stateful
@@ -56,8 +57,8 @@ object StreamBatchParity {
 
   private def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { Files.deleteIfExists(f); () })
+      Using.resource(Files.walk(p))(_.sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => { Files.deleteIfExists(f); () }))
     }
   }
 
@@ -68,8 +69,9 @@ object StreamBatchParity {
     val staging = Files.createTempDirectory("graft-parity-stage")
     try {
       df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      val part = Files.list(staging).filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst().orElseThrow(() => new IllegalStateException("no parquet part written"))
+      val part = Using.resource(Files.list(staging))(
+        _.filter(_.getFileName.toString.endsWith(".parquet")).findFirst())
+        .orElseThrow(() => new IllegalStateException("no parquet part written"))
       val target = dir.resolve(name)
       Files.move(part, target)
       Files.setLastModifiedTime(target, FileTime.fromMillis(mtimeMs))
@@ -84,8 +86,9 @@ object StreamBatchParity {
     val staging = Files.createTempDirectory("graft-parity-stage")
     try {
       df.coalesce(1).write.mode("overwrite").json(staging.toString)
-      val part = Files.list(staging).filter(_.getFileName.toString.endsWith(".json"))
-        .findFirst().orElseThrow(() => new IllegalStateException("no json part written"))
+      val part = Using.resource(Files.list(staging))(
+        _.filter(_.getFileName.toString.endsWith(".json")).findFirst())
+        .orElseThrow(() => new IllegalStateException("no json part written"))
       val target = dir.resolve(name)
       Files.move(part, target)
       Files.setLastModifiedTime(target, FileTime.fromMillis(mtimeMs))
@@ -120,8 +123,8 @@ object StreamBatchParity {
         val pdir = staging.resolve(s"__slice=$idx")
         val part =
           if (Files.exists(pdir))
-            Files.list(pdir).filter(_.getFileName.toString.endsWith(ext))
-              .findFirst()
+            Using.resource(Files.list(pdir))(
+              _.filter(_.getFileName.toString.endsWith(ext)).findFirst())
           else java.util.Optional.empty[Path]()
         if (part.isPresent) {
           val target = dir.resolve(name)

@@ -145,11 +145,10 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // layout-aware write: bucket count chosen from the SEED batch
-        // (scale-adaptive) and persisted, so every later micro-batch
-        // hashes under the same modulus (replace-by-documentid's
-        // correctness invariant) — see VectorStoreWriter.writeWithLayout
-        VectorStoreWriter.writeWithLayout(batch, sinkPath)
+        // the store's persisted layout: every micro-batch hashes under
+        // the modulus the store was created with, whichever writer
+        // created it (replace-by-documentid's correctness invariant)
+        VectorStoreWriter.write(batch, sinkPath)
       }
 
   /** Streaming CDC apply: each micro-batch of changelog rows (seq, op

@@ -3,8 +3,10 @@ package graft
 import graft.operators.Processors
 import graft.pipeline.IngestionPipeline
 import graft.sinks.VectorStoreWriter
+import graft.streaming.StreamingIngest
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import org.apache.spark.storage.StorageLevel
+import java.nio.file.{Files, Paths}
 
 /** Pipeline composition + vector-store writer, mirroring the reference's
   * IngestionPipelineTests: reader → processors → chunker → enrichers →
@@ -17,6 +19,25 @@ class PipelineSpec extends SparkSpecBase {
     (1L, "# Title\n\ngood content here\n\n## Sub\n\nmore good text"),
     (2L, "plain document with bad and broken words")
   ).toDF("doc_id", "text")
+
+  private def recs(rows: (Long, Int, String, String)*) =
+    VectorStoreWriter.toVectorRecords(
+      rows.toSeq.toDF("doc_id", "chunk_id", "content", "context"), 16)
+
+  /** Pin a store's bucket count before its first write, as a store
+    * created with that layout would have it. */
+  private def pinLayout(dir: String, buckets: Int): Unit = {
+    Files.writeString(Paths.get(dir, VectorStoreWriter.LayoutFile),
+      s"""{"numBuckets":$buckets}""")
+    ()
+  }
+
+  private def layoutOf(dir: String): String =
+    Files.readString(Paths.get(dir, VectorStoreWriter.LayoutFile))
+
+  private def contentsOf(dir: String): Map[String, String] =
+    spark.read.parquet(dir)
+      .select("documentid", "content").as[(String, String)].collect().toMap
 
   test("canonical pipeline: chunks carry summary + sentiment") {
     val out = IngestionPipeline.canonical.chunks(spark, docs)
@@ -83,24 +104,17 @@ class PipelineSpec extends SparkSpecBase {
 
   test("incremental write preserves other docs in the SAME bucket (regression)") {
     val dir = Files.createTempDirectory("graft-vsw-bucket").toString
-    def recs(rows: (Long, Int, String, String)*) =
-      VectorStoreWriter.toVectorRecords(
-        rows.toSeq.toDF("doc_id", "chunk_id", "content", "context"), 16)
-    // numBuckets=1 forces every document into one bucket
-    VectorStoreWriter.write(recs((1L, 0, "doc one v1", ""), (2L, 0, "doc two", "")),
-      dir, numBuckets = 1)
-    VectorStoreWriter.write(recs((1L, 0, "doc one v2", "")), dir, numBuckets = 1)
-    val contents = spark.read.parquet(dir)
-      .select("documentid", "content").as[(String, String)].collect().toMap
+    // a one-bucket layout forces every document into one bucket
+    pinLayout(dir, 1)
+    VectorStoreWriter.write(recs((1L, 0, "doc one v1", ""), (2L, 0, "doc two", "")), dir)
+    VectorStoreWriter.write(recs((1L, 0, "doc one v2", "")), dir)
+    val contents = contentsOf(dir)
     assert(contents("1") == "doc one v2")
     assert(contents("2") == "doc two") // survived the shared-bucket rewrite
   }
 
-  test("writeWithLayout: bucket count chosen at creation, persisted, and honored by appends") {
+  test("layout: bucket count chosen at creation, persisted, and honored by appends") {
     val dir = Files.createTempDirectory("graft-vsw-layout").toString
-    def recs(rows: (Long, Int, String, String)*) =
-      VectorStoreWriter.toVectorRecords(
-        rows.toSeq.toDF("doc_id", "chunk_id", "content", "context"), 16)
     // the sizing policy itself: floor, target-row scaling, power of 2, cap
     assert(VectorStoreWriter.chooseNumBuckets(0L) == VectorStoreWriter.MinBuckets)
     assert(VectorStoreWriter.chooseNumBuckets(1000L) == VectorStoreWriter.MinBuckets)
@@ -109,18 +123,14 @@ class PipelineSpec extends SparkSpecBase {
     assert(VectorStoreWriter.chooseNumBuckets(Long.MaxValue / 4)
       == VectorStoreWriter.MaxBuckets)
     // seed write records the layout...
-    VectorStoreWriter.writeWithLayout(
+    VectorStoreWriter.write(
       recs((1L, 0, "doc one v1", ""), (2L, 0, "doc two", "")), dir)
-    val layout = new String(Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "_layout.json")), "UTF-8")
-    assert(layout == s"""{"numBuckets":${VectorStoreWriter.MinBuckets}}""")
+    assert(layoutOf(dir) == s"""{"numBuckets":${VectorStoreWriter.MinBuckets}}""")
     // ...and the replace-by-documentid contract holds across later
     // writes (same modulus → the old records are found and replaced)
-    VectorStoreWriter.writeWithLayout(recs((1L, 0, "doc one v2", "")), dir)
-    val contents = spark.read.parquet(dir)
-      .select("documentid", "content").as[(String, String)].collect().toMap
-    assert(contents == Map("1" -> "doc one v2", "2" -> "doc two"))
-    // bucket-directory cardinality is the recorded layout's, not NumBuckets
+    VectorStoreWriter.write(recs((1L, 0, "doc one v2", "")), dir)
+    assert(contentsOf(dir) == Map("1" -> "doc one v2", "2" -> "doc two"))
+    // bucket-directory cardinality is the recorded layout's
     val bucketDirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("doc_bucket="))
     assert(bucketDirs.length <= VectorStoreWriter.MinBuckets)
@@ -134,21 +144,86 @@ class PipelineSpec extends SparkSpecBase {
     // bucket, because dynamic partition overwrite only swaps files at
     // job commit and survivors are localCheckpointed before the write
     val dir = Files.createTempDirectory("graft-vsw-crash").toString
-    def recs(rows: (Long, Int, String, String)*) =
-      VectorStoreWriter.toVectorRecords(
-        rows.toSeq.toDF("doc_id", "chunk_id", "content", "context"), 16)
-    VectorStoreWriter.write(recs((1L, 0, "doc one v1", ""), (2L, 0, "doc two", "")),
-      dir, numBuckets = 1)
+    pinLayout(dir, 1)
+    VectorStoreWriter.write(recs((1L, 0, "doc one v1", ""), (2L, 0, "doc two", "")), dir)
     val poison = recs((1L, 0, "doc one v2", ""))
       .withColumn("content",
         when(col("key") === "1:0", raise_error(lit("simulated mid-write crash")))
           .otherwise(col("content")))
     intercept[Exception] {
-      VectorStoreWriter.write(poison, dir, numBuckets = 1)
+      VectorStoreWriter.write(poison, dir)
     }
-    val contents = spark.read.parquet(dir)
-      .select("documentid", "content").as[(String, String)].collect().toMap
-    assert(contents == Map("1" -> "doc one v1", "2" -> "doc two"))
+    assert(contentsOf(dir) == Map("1" -> "doc one v1", "2" -> "doc two"))
+  }
+
+  test("legacy store without a layout file: the first write pins 256 buckets") {
+    // the former writer: a fixed 256 buckets, no _layout.json
+    val dir = Files.createTempDirectory("graft-vsw-legacy").toString
+    recs((1L, 0, "doc one v1", ""), (2L, 0, "doc two", ""), (3L, 0, "doc three v1", ""))
+      .withColumn("doc_bucket", pmod(xxhash64(col("documentid")), lit(256)))
+      .write.mode("overwrite").partitionBy("doc_bucket").parquet(dir)
+    VectorStoreWriter.write(recs((1L, 0, "doc one v2", ""), (3L, 0, "doc three v2", "")), dir)
+    assert(layoutOf(dir) == """{"numBuckets":256}""")
+    assert(spark.read.parquet(dir).count() == 3) // no stale revision left behind
+    assert(contentsOf(dir) ==
+      Map("1" -> "doc one v2", "2" -> "doc two", "3" -> "doc three v2"))
+  }
+
+  test("store without a layout file and a bucket id past 256 fails loudly") {
+    val dir = Files.createTempDirectory("graft-vsw-unknown").toString
+    recs((1L, 0, "doc one v1", "")).withColumn("doc_bucket", lit(300))
+      .write.mode("overwrite").partitionBy("doc_bucket").parquet(dir)
+    val e = intercept[IllegalStateException] {
+      VectorStoreWriter.write(recs((1L, 0, "doc one v2", "")), dir)
+    }
+    assert(e.getMessage.contains("doc_bucket=300"))
+    assert(!Files.exists(Paths.get(dir, VectorStoreWriter.LayoutFile)))
+    assert(contentsOf(dir) == Map("1" -> "doc one v1"))
+  }
+
+  test("fresh-store write evaluates its input once") {
+    // a filter, so the layout's record count cannot prune it away
+    val evaluated = spark.sparkContext.longAccumulator("vsw-input-rows")
+    val seen = udf { (_: String) => evaluated.add(1); true }
+    val input = recs((1L, 0, "a", ""), (2L, 0, "b", ""), (3L, 0, "c", ""), (3L, 1, "d", ""))
+      .where(seen(col("key")))
+    val dir = Files.createTempDirectory("graft-vsw-once").toString
+    VectorStoreWriter.write(input, dir)
+    assert(evaluated.value == 4)
+    assert(spark.read.parquet(dir).count() == 4)
+    assert(input.storageLevel == StorageLevel.NONE) // the writer's cache is released
+    // an input the caller persisted stays cached
+    val pinned = recs((4L, 0, "e", "")).persist(StorageLevel.MEMORY_ONLY)
+    try {
+      VectorStoreWriter.write(pinned, Files.createTempDirectory("graft-vsw-pinned").toString)
+      assert(pinned.storageLevel == StorageLevel.MEMORY_ONLY)
+    } finally pinned.unpersist()
+  }
+
+  test("bulk run, then streaming upsert: revised documents replace their records") {
+    val root = Files.createTempDirectory("graft-run-then-stream")
+    val store = root.resolve("store").toString
+    val in = Files.createDirectory(root.resolve("in"))
+    def text(id: Long, rev: String) =
+      (1 to 40).map(w => s"word${(id * 7 + w) % 97}").mkString(s"doc $id ", " ", s" $rev")
+    def docsOf(texts: Seq[(Long, String)]) =
+      texts.map { case (id, t) => (id, t, "en", "t") }.toDF("doc_id", "text", "lang", "source")
+    val v1 = (1L to 200L).map(id => id -> text(id, "first"))
+    IngestionPipeline.canonical.run(spark, docsOf(v1), store, dim = 16)
+    val revised = (1L to 20L).map(id => id -> text(id, "second revision"))
+    Files.writeString(in.resolve("revised.json"), revised.map { case (id, t) =>
+      s"""{"doc_id":$id,"text":"$t","lang":"en","source":"t"}""" }.mkString("\n"))
+    StreamingIngest.incrementalWriter(StreamingIngest.chunkStream(spark, in.toString),
+      store, root.resolve("ckpt").toString, dim = 16).start().awaitTermination()
+    val current = (v1.toMap ++ revised).toSeq
+    val chunks = IngestionPipeline.canonical.chunks(spark, docsOf(current))
+    val expected = VectorStoreWriter.toVectorRecords(chunks, 16,
+        metadataCols = IngestionPipeline.metadataColumns(chunks))
+      .select("key", "content").as[(String, String)].collect().sorted.toSeq
+    val got = spark.read.parquet(store)
+      .select("key", "content").as[(String, String)].collect().sorted.toSeq
+    assert(got.size == expected.size)
+    assert(got == expected)
   }
 
   test("runWith: custom terminal writer receives the composed chunk plan (reference QAWriter shape)") {
